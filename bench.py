@@ -317,13 +317,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
-    # demoted queries (pytest-only parity twins) keep their bench rows:
-    # a demotion rebalances the DRIVER window, it must not silently end
-    # a query's perf trend (ev_overlap_incident_sessions, r7).
-    from simple_etl_pipeline_spark.testing import demoted_queries
-
-    for _n, (_fn, _sql) in demoted_queries().items():
-        queries.setdefault(_n, _fn)
 
     # Warm the JVM/codegen/file-listing paths so per-query numbers measure
     # the queries, not session startup.

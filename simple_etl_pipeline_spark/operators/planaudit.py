@@ -51,7 +51,7 @@ def plan_fingerprint(df: DataFrame) -> str:
     variables of higher-order functions (``lambda x_17#``) and
     common-subexpression aliases (``_common_expr_4#``) — so those
     plans' fingerprints depended on how many plans the session had
-    built BEFORE them, and a driver-window reorder spuriously "moved"
+    built BEFORE them, and a registry reorder spuriously "moved"
     39 fingerprints on unchanged code. Both normalized here, as are
     run-scoped checkpoint RDD ids (one-time reset of those values;
     order-invariance is pinned by
@@ -234,7 +234,8 @@ def scalar_bnlj_violations(plan: str) -> list[str]:
     :func:`plan_fingerprint`: when the session's cache manager splices
     an EXECUTED persisted frame into the plan, the InMemoryRelation
     re-prints that cache's AdaptiveSparkPlan with ``== Final Plan ==``
-    / ``== Initial Plan ==`` sections whose indentation RESTARTS at an
+    (``== Current Plan ==`` while not final) / ``== Initial Plan ==``
+    sections whose indentation RESTARTS at an
     unrelated column (and nested splices interleave), so the tree-art
     containment arithmetic below stops meaning parent/child from the
     first such marker on (r16 find: a suite-ordering cache hit turned
@@ -260,7 +261,7 @@ def scalar_bnlj_violations(plan: str) -> list[str]:
             continue
         if not ln.strip():
             break
-        if re.match(r"^[\s:+\-]*== (?:Final|Initial) Plan ==\s*$", ln):
+        if re.match(r"^[\s:+\-]*== (?:Final|Current|Initial) Plan ==\s*$", ln):
             n_reliable = _cnt
             break
         if re.search(r"\((\d+)\)(?:, Statistics\(.*\))?\s*$", ln):

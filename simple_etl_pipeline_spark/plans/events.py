@@ -346,58 +346,7 @@ FROM stages
 """
 
 
-QUERIES = {
-    "ev_asof_purchase_click": ev_asof_purchase_click,
-    "ev_funnel": ev_funnel,
-    "ev_rollup_multires": ev_rollup_multires,
-    # ev_range_join_nearby DEMOTED round 8 (capacity rule, one per
-    # r8 registration): ev_range_join_incidents (r7 driver-green)
-    # keeps an interval-join surface registered; the nearby variant
-    # retains full pytest parity via testing.demoted_queries().
-    # ev_tumbling_hourly DEMOTED round 9 (capacity rule, matching the
-    # search_hybrid_rrf registration): its streaming twin
-    # st_tumbling_hourly shares the IDENTICAL oracle and stays
-    # registered — one tumbling-hourly surface per the ledger's
-    # keep-one-per-surface rule, and the streaming side is the one
-    # whose adapter code (_run_to_memory) carries unique machinery.
-    # Full pytest parity via testing.demoted_queries(); bench row kept.
-    # ev_sliding_windows DEMOTED round 11 (capacity rule, matching the
-    # ev_time_embargo_split registration): its streaming twin
-    # st_sliding_windows shares the IDENTICAL oracle and stays
-    # registered — the same keep-one-per-surface rationale as the r9
-    # ev_tumbling_hourly demotion above. Full pytest parity via
-    # testing.demoted_queries() (never a bench HEADLINE member; note
-    # corrected r14).
-    # ev_session_windows DEMOTED round 12 (capacity rule, matching the
-    # txt_boilerplate_lines registration): its streaming twin
-    # st_session_windows shares the IDENTICAL oracle and stays
-    # registered — the same keep-one-per-surface rule as the r9/r11
-    # tumbling/sliding demotions, completing the set (all three
-    # windowing shapes now keep exactly their streaming side
-    # registered, the side whose _run_to_memory adapter carries the
-    # unique machinery). Full pytest parity via
-    # testing.demoted_queries(); bench row kept.
-    # ev_user_daily_activity DEMOTED round 14 (capacity rule, matching
-    # the st_embedding_drift registration at streaming/events.py
-    # QUERIES): a per-(day, user) rollup whose every surface is pinned
-    # by registered siblings — st_tumbling_hourly's identical
-    # time-truncated aggregation, ev_cuped's per-user exact
-    # decimal-sum, agg_distinct_counts' distinct heads — the
-    # rank-derivative class of the r12 window_ntile demotion. Full
-    # pytest parity via testing.demoted_queries() (not a bench
-    # HEADLINE member — no perf trend ends with this demotion).
-}
-
-ORACLES = {
-    "ev_asof_purchase_click": EV_ASOF_ORACLE,
-    "ev_funnel": EV_FUNNEL_ORACLE,
-    "ev_rollup_multires": EV_ROLLUP_MULTIRES_ORACLE,
-    # ev_sliding_windows demoted r11, ev_session_windows demoted r12,
-    # ev_user_daily_activity demoted r14 — see QUERIES comment
-}
-
-
-# --- heavy-hitter / key-skew profile (TAIL: no driver-window slot) --------
+# --- heavy-hitter / key-skew profile --------------------------------------
 HH_TOP_K = 10
 
 
@@ -482,7 +431,7 @@ FROM t GROUP BY event_type ORDER BY event_type
 """
 
 
-# --- cohort retention (TAIL: no driver-window slot) -----------------------
+# --- cohort retention -----------------------------------------------------
 def ev_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention: users grouped by first-seen day, retention =
     share of the cohort active again N days later. The canonical
@@ -1314,8 +1263,7 @@ FROM perfile ORDER BY file_id
 SKIP_BLOOM_STATS_ORACLE = _skip_bloom_oracle()
 
 
-# --- CUPED variance reduction (round-6 prebuild: pytest-oracle, ------------
-# registration deferred to a round-6 window slot per the rotation ledger)
+# --- CUPED variance reduction ---------------------------------------------
 CUPED_CUTOFF = "2024-01-16 00:00:00"
 
 
@@ -3167,101 +3115,56 @@ FROM agg ORDER BY event_type
 EV_MAD_OUTLIERS_ORACLE = _ev_mad_oracle()
 
 
-TAIL_QUERIES = {
+QUERIES = {
+    "ev_asof_purchase_click": ev_asof_purchase_click,
+    "ev_funnel": ev_funnel,
+    "ev_rollup_multires": ev_rollup_multires,
     "skip_bloom_stats": skip_bloom_stats,
     "ev_heavy_hitters": ev_heavy_hitters,
     "ev_json_variant": ev_json_variant,
     "ev_retention_cohorts": ev_retention_cohorts,
     "ev_zscore_outliers": ev_zscore_outliers,
-    # ev_hll_user_rollup DEMOTED round 15 (capacity rule, matching the
-    # ev_mad_outliers registration below): the HLL-sketch sibling of
-    # the registered EXACT per-user rollups — agg_distinct_counts'
-    # distinct heads and ev_rollup_multires' exact multiresolution
-    # counts pin the surface; the sketch-vs-exact precedent that
-    # demoted agg_approx_percentile (r12), ev_countmin_users (r13) and
-    # agg_approx_distinct (r14). Full pytest parity via
-    # testing.demoted_queries(); the op never had a bench HEADLINE
-    # row (ev_hll_overlap carries the HLL-sketch perf trend).
     "ev_range_join_incidents": ev_range_join_incidents,
-    # ev_countmin_users DEMOTED round 13 (capacity rule, one per r13
-    # registration — matching dq_embedding_drift at
-    # plans/similarity.py TAIL_QUERIES): the count-min sketch sibling
-    # of the registered EXACT ev_heavy_hitters on the same key
-    # universe (the agg_approx_percentile r12 precedent: keep the
-    # exact head registered, the sketch keeps full pytest parity via
-    # testing.demoted_queries()).
     "ev_scd2_users": ev_scd2_users,
     "ev_zorder_layout": ev_zorder_layout,
-    # round-6 registrations (prebuilt + pytest-oracle-green in round 5)
     "ev_cuped": ev_cuped,
-    # ev_attribution DEMOTED round 12 (capacity rule, matching the
-    # mm_phash_dedup registration): the first/last-touch head — the
-    # registered ev_attribution_linear pins the same sessionized
-    # credit pipeline with the strictly-larger linear-split surface.
-    # Full pytest parity via testing.demoted_queries(); bench row
-    # kept.
     "ev_conversion_windows": ev_conversion_windows,
-    # round-7 registrations (prebuilt + pytest-oracle-green in round 6).
-    # Matching demotions keep net registry growth at ZERO (capacity
-    # rule, VERDICT r5 ask #2 / r6 ask #1) — each demoted query keeps
-    # full pytest oracle parity via testing.demoted_queries():
-    #   - ev_json_extract: sibling ev_json_variant (r6 driver-green)
-    #     pins the same props JSON-path extraction semantics.
-    #   - ev_overlap_incident_sessions: one of THREE interval-join
-    #     surfaces; ev_range_join_incidents (point-in-range) and
-    #     ev_range_join_nearby stay registered.
-    #   - window_lag_events (plans/relational.py): a derivative of the
-    #     registering ev_path_transitions — the same user-keyed LAG
-    #     window over events, without the downstream transition
-    #     aggregation.
     "ev_quantile_sketch": ev_quantile_sketch,
     "ev_attribution_linear": ev_attribution_linear,
     "ev_path_transitions": ev_path_transitions,
-    # round-8 registrations (prebuilt + pytest-oracle-green in round
-    # 7). Matching demotions (capacity rule): ev_range_join_nearby
-    # (above), dedup_simhash_pairs, sim_ivf_topk, ref_clean_price —
-    # rationale at each module's QUERIES and testing.demoted_queries().
     "ev_gap_fill": ev_gap_fill,
     "ev_hll_overlap": ev_hll_overlap,
-    # round-10 registrations (prebuilt + pytest-oracle-green since r8:
-    # the SRM guardrail got its decimal(38,0) chi-square headroom per
-    # ADVICE r8, the trimmed mean is global_row_number's third
-    # surface). Matching demotions: agg_rollup_orders +
-    # orderby_limit_top_orders at plans/relational.py QUERIES.
     "ev_srm_check": ev_srm_check,
     "ev_trimmed_mean": ev_trimmed_mean,
-    # round-11 registrations (r11 bank, prebuilt + pytest-oracle-green
-    # since r9, sf0.1 hash-swept on final r10 code). Matching
-    # demotions: ev_sliding_windows at QUERIES above +
-    # ref_clean_size_gender at plans/reference_parity.py — capacity
-    # rule, net registry growth zero.
     "ev_time_embargo_split": ev_time_embargo_split,
     "ev_seasonal_residuals": ev_seasonal_residuals,
-    # round-15 registration (r15 bank, built in the round-12
-    # continuation session with its full evidence kit — pytest-oracle
-    # at 3 SFs, MAD-degeneracy / saturation edge corpora, sf0.1
-    # judge-swept every round since; matching demotion:
-    # ev_hll_user_rollup above — capacity rule, net registry growth
-    # zero). Exact median/MAD robust outlier monitor:
-    # global_row_number's 7th/8th surfaces — per-type exact order
-    # statistics via two range shuffles + |types|-row broadcast
-    # offsets, never a |types|-key window; deviations decimal-staged
-    # and saturated at DQ_DELTA_CAP on both engines.
     "ev_mad_outliers": ev_mad_outliers,
+    "ev_json_extract": ev_json_extract,
+    "ev_overlap_incident_sessions": ev_overlap_incident_sessions,
+    "ev_range_join_nearby": ev_range_join_nearby,
+    "ev_tumbling_hourly": ev_tumbling_hourly,
+    "ev_sliding_windows": ev_sliding_windows,
+    "ev_session_windows": ev_session_windows,
+    "ev_attribution": ev_attribution,
+    "ev_countmin_users": ev_countmin_users,
+    "ev_user_daily_activity": ev_user_daily_activity,
+    "ev_hll_user_rollup": ev_hll_user_rollup,
+    "ev_changepoint_cusum": ev_changepoint_cusum,
 }
-TAIL_ORACLES = {
+
+ORACLES = {
+    "ev_asof_purchase_click": EV_ASOF_ORACLE,
+    "ev_funnel": EV_FUNNEL_ORACLE,
+    "ev_rollup_multires": EV_ROLLUP_MULTIRES_ORACLE,
     "skip_bloom_stats": SKIP_BLOOM_STATS_ORACLE,
     "ev_heavy_hitters": EV_HEAVY_HITTERS_ORACLE,
     "ev_json_variant": EV_JSON_VARIANT_ORACLE,
     "ev_retention_cohorts": EV_RETENTION_ORACLE,
     "ev_zscore_outliers": EV_ZSCORE_ORACLE,
-    # ev_hll_user_rollup demoted r15 — see TAIL_QUERIES comment
     "ev_range_join_incidents": EV_RANGE_INCIDENTS_ORACLE,
-    # ev_countmin_users demoted r13 — see TAIL_QUERIES comment
     "ev_scd2_users": EV_SCD2_ORACLE,
     "ev_zorder_layout": EV_ZORDER_ORACLE,
     "ev_cuped": EV_CUPED_ORACLE,
-    # ev_attribution demoted r12 — see TAIL_QUERIES comment
     "ev_conversion_windows": EV_CONVERSION_ORACLE,
     "ev_quantile_sketch": EV_QSKETCH_ORACLE,
     "ev_attribution_linear": EV_ATTRIBUTION_LINEAR_ORACLE,
@@ -3273,4 +3176,15 @@ TAIL_ORACLES = {
     "ev_time_embargo_split": EV_TIME_EMBARGO_ORACLE,
     "ev_seasonal_residuals": EV_SEASONAL_RESIDUALS_ORACLE,
     "ev_mad_outliers": EV_MAD_OUTLIERS_ORACLE,
+    "ev_json_extract": EV_JSON_ORACLE,
+    "ev_overlap_incident_sessions": EV_OVERLAP_ORACLE,
+    "ev_range_join_nearby": EV_RANGE_JOIN_ORACLE,
+    "ev_tumbling_hourly": EV_TUMBLING_ORACLE,
+    "ev_sliding_windows": EV_SLIDING_ORACLE,
+    "ev_session_windows": EV_SESSION_ORACLE,
+    "ev_attribution": EV_ATTRIBUTION_ORACLE,
+    "ev_countmin_users": EV_COUNTMIN_ORACLE,
+    "ev_user_daily_activity": EV_DAILY_ORACLE,
+    "ev_hll_user_rollup": EV_HLL_ROLLUP_ORACLE,
+    "ev_changepoint_cusum": EV_CHANGEPOINT_CUSUM_ORACLE,
 }

@@ -133,22 +133,7 @@ FROM s ORDER BY doc_id
 """
 
 
-QUERIES = {
-    "mm_binary_meta": mm_binary_meta,
-    "mm_blob_features": mm_blob_features,
-    "mm_frame_sample": mm_frame_sample,
-    "mm_resize": mm_resize,
-}
-
-ORACLES = {
-    "mm_binary_meta": MM_BINARY_META_ORACLE,
-    "mm_blob_features": MM_BLOB_FEATURES_ORACLE,
-    "mm_frame_sample": MM_FRAME_SAMPLE_ORACLE,
-    "mm_resize": MM_RESIZE_ORACLE,
-}
-
-
-# --- blob-level dedup (TAIL: no driver-window slot) -----------------------
+# --- blob-level dedup -----------------------------------------------------
 def mm_dedup_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup of binary payloads by content hash, BEFORE any decode:
     at 100 TB of media the cheapest flop is the one skipped on a
@@ -675,36 +660,22 @@ FROM g ORDER BY shard_id
 """
 
 
-# mm_dedup_blobs was DEMOTED to pytest-only parity in round 6
-# (tests/test_oracle_parity.py DEMOTED map): as its docstring says, it
-# is dedup_exact's hash-groupBy shape applied to the blob column — the
-# registered dedup_exact hash pins the dedup semantics and
-# mm_binary_meta (driver-green r5) pins the blob plumbing.
-TAIL_QUERIES: dict = {
-    # round-12 registration (r12 bank, prebuilt + pytest-oracle-green
-    # since the r9 continuation session, sf0.1 hash-swept on final r11
-    # code; matching demotion: ev_attribution at plans/events.py
-    # TAIL_QUERIES — capacity rule, net registry growth zero). The
-    # function body above is UNTOUCHED since the r10 band-geometry
-    # mitigation, so the r10 probe evidence (3x20-bit bands, re-probe
-    # 0.45@256, terminal-leg attribution) carries — this dict entry is
-    # the mechanical register step VERDICT r11 #2 prescribed.
+QUERIES = {
+    "mm_binary_meta": mm_binary_meta,
+    "mm_blob_features": mm_blob_features,
+    "mm_frame_sample": mm_frame_sample,
+    "mm_resize": mm_resize,
+    "mm_dedup_blobs": mm_dedup_blobs,
     "mm_phash_dedup": mm_phash_dedup,
-    # round-15 registration (r15 bank, built in the round-12
-    # continuation session with its full evidence kit — pytest-oracle
-    # at 3 SFs, zero-byte / single-giant-blob edge corpora, sf0.1
-    # judge-swept every round since; matching demotion: st_dedup_index
-    # at streaming/events.py QUERIES — capacity rule, net registry
-    # growth zero). Byte-budget WebDataset-style shard layout:
-    # global_prefix_sum over blob byte lengths (one range shuffle) +
-    # the closed-form start-offset shard rule — no sequential greedy
-    # state, deviation bounded by max blob size, manifest-only output.
-    # The SAME change lands the carried r12 watch-item: mm_phash_dedup's
-    # C(m,2) / m_a*m_b weights now stage through decimal(38,0)/HUGEINT
-    # (see the weight expressions above).
     "mm_bytes_shard_pack": mm_bytes_shard_pack,
 }
-TAIL_ORACLES: dict = {
+
+ORACLES = {
+    "mm_binary_meta": MM_BINARY_META_ORACLE,
+    "mm_blob_features": MM_BLOB_FEATURES_ORACLE,
+    "mm_frame_sample": MM_FRAME_SAMPLE_ORACLE,
+    "mm_resize": MM_RESIZE_ORACLE,
+    "mm_dedup_blobs": MM_DEDUP_BLOBS_ORACLE,
     "mm_phash_dedup": MM_PHASH_ORACLE,
     "mm_bytes_shard_pack": MM_BYTES_SHARD_PACK_ORACLE,
 }

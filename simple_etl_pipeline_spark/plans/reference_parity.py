@@ -259,21 +259,10 @@ def _with_view(body: str) -> str:
     return f"WITH dirty AS ({DIRTY_VIEW_SQL}) {body}"
 
 
-# ref_clean_price DEMOTED round 8 (capacity rule, one per r8
-# registration): P1's semantics stay pinned by the registered
-# ref_transform_full full-pipeline hash and the clean_price
-# differential suite; full pytest parity via testing.demoted_queries().
 REF_CLEAN_PRICE_ORACLE = _with_view(
     f"SELECT p_partkey, price, {SQL_CLEAN_PRICE} AS price_idr FROM dirty ORDER BY p_partkey"
 )
 
-# ref_clean_rating / ref_clean_colors DEMOTED round 9 (capacity rule,
-# matching the dq_expectations / agg_basket_lift registrations): the
-# exact class ref_clean_price established in r8 — P2/P3 semantics stay
-# pinned by the registered ref_transform_full full-pipeline hash plus
-# the per-cleaner differential suites; full pytest parity continues
-# via testing.demoted_queries(), and their bench exposure was always
-# through ref_transform_full.
 REF_CLEAN_RATING_ORACLE = _with_view(
     f"SELECT p_partkey, rating, {SQL_CLEAN_RATING} AS rating_clean FROM dirty ORDER BY p_partkey"
 )
@@ -288,13 +277,10 @@ REF_CLEAN_SIZE_GENDER_ORACLE = _with_view(
 
 ORACLES = {
     "ref_dirty_view": _with_view("SELECT * FROM dirty ORDER BY p_partkey"),
-    # ref_clean_size_gender DEMOTED round 11 (capacity rule, matching
-    # the ev_seasonal_residuals registration): the ref_clean_price
-    # class — its size/gender prefix-strips are pinned by
-    # ref_transform_full's pipeline hash (registered, in the r11
-    # window) plus the per-cleaner differential + hypothesis suites.
-    # Full pytest parity via testing.demoted_queries() (never a bench
-    # HEADLINE member; note corrected r14).
+    "ref_clean_price": REF_CLEAN_PRICE_ORACLE,
+    "ref_clean_rating": REF_CLEAN_RATING_ORACLE,
+    "ref_clean_colors": REF_CLEAN_COLORS_ORACLE,
+    "ref_clean_size_gender": REF_CLEAN_SIZE_GENDER_ORACLE,
     "ref_remove_dirty": _with_view(
         f"SELECT p_partkey, title, price, rating FROM dirty WHERE {SQL_DIRTY_KEEP} ORDER BY p_partkey"
     ),
@@ -317,7 +303,10 @@ ORACLES = {
 
 QUERIES = {
     "ref_dirty_view": ref_dirty_view,
-    # ref_clean_size_gender demoted r11 — see ORACLES comment
+    "ref_clean_price": ref_clean_price,
+    "ref_clean_rating": ref_clean_rating,
+    "ref_clean_colors": ref_clean_colors,
+    "ref_clean_size_gender": ref_clean_size_gender,
     "ref_remove_dirty": ref_remove_dirty,
     "ref_transform_full": ref_transform_full,
 }

@@ -1429,130 +1429,6 @@ LIMIT 100
 """
 
 
-QUERIES = {
-    # Registration order is meaningful: the driver's correctness gate
-    # checks a prefix window of queries() in registration order, so the
-    # entries most in need of a fresh driver row (historically q12
-    # after the oracle CAST fix) come first.
-    "q12_shipmode_priority": q12_shipmode_priority,
-    # agg_approx_distinct DEMOTED round 14 (capacity rule, one per r14
-    # registration — matching dq_snapshot_diff at TAIL_QUERIES): the
-    # HLL-sketch sibling of the registered EXACT agg_distinct_counts
-    # on the same key universe — the sketch-vs-exact precedent that
-    # demoted agg_approx_percentile (r12) and ev_countmin_users (r13);
-    # its hashed output already IS the exact counts plus a tolerance
-    # boolean, so the registered exact row pins the whole surface.
-    # Full pytest parity continues via testing.demoted_queries()
-    # (never a bench HEADLINE member, so no perf trend ends here —
-    # the r14 review corrected this note class repo-wide).
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_shipping_priority": q3_shipping_priority,
-    "q5_region_revenue": q5_region_revenue,
-    "q6_revenue_filter": q6_revenue_filter,
-    "q14_promo_revenue": q14_promo_revenue,
-    "join_broadcast_brand_revenue": join_broadcast_brand_revenue,
-    "window_rolling_7d": window_rolling_7d,
-    # round-10 demotions (one per round-10 registration; capacity rule
-    # — each keeps full pytest oracle parity via
-    # testing.demoted_queries() and its bench row):
-    #   - orderby_limit_top_orders: TakeOrderedAndProject surface
-    #     shared with the registered q10/q15/q18 order+limit heads.
-    #   - agg_rollup_orders: grouping-sets family — the registered
-    #     agg_cube_lineitem + agg_grouping_sets pin the Expand
-    #     operator; rollup is a strict subset of both.
-    #   - agg_salted_sum: its RESULT equals the plain sum the
-    #     registered aggregation rows already hash; its unique content
-    #     — the salting plan shape — is pinned by test_plan_shapes.
-    #   - window_running_total: prefix-sum semantics are now pinned by
-    #     the global_prefix_sum surfaces (train_token_budget_pack's
-    #     barrier-shape test + the registering ev_trimmed_mean rank
-    #     path); the un-partitioned running-sum window it demonstrates
-    #     is the exact shape global_prefix_sum exists to replace.
-    "q2_top_supplier_per_nation": q2_top_supplier_per_nation,
-    "q4_order_priority": q4_order_priority,
-    "q7_nation_volume": q7_nation_volume,
-    "q10_returned_items": q10_returned_items,
-    "q13_order_count_distribution": q13_order_count_distribution,
-    "join_full_outer_nation_presence": join_full_outer_nation_presence,
-    "q15_top_supplier": q15_top_supplier,
-    "q18_large_volume_customers": q18_large_volume_customers,
-    "q19_disjunctive_filter": q19_disjunctive_filter,
-    "q22_idle_customers": q22_idle_customers,
-    "scalar_functions": scalar_functions,
-    "join_semi_discounted": join_semi_discounted,
-    "join_anti_customers_without_orders": join_anti_customers_without_orders,
-    "agg_distinct_counts": agg_distinct_counts,
-    # agg_cube_lineitem DEMOTED round 13 (capacity rule, one per r13
-    # registration — matching st_dedup_lsh_index at
-    # streaming/stateful.py QUERIES): its Expand operator is a strict
-    # special case of the registered agg_grouping_sets (the rationale
-    # that demoted agg_rollup_orders in r10 — grouping_sets is the
-    # strictly-larger surface). Full pytest parity via
-    # testing.demoted_queries().
-    "agg_grouping_sets": agg_grouping_sets,
-    "agg_conditional_pivot": agg_conditional_pivot,
-    "agg_percentiles": agg_percentiles,
-    # agg_histogram DEMOTED round 11 (capacity rule, matching the
-    # dq_profile_drift registration): the equi-width bucketing sibling
-    # of the registered percentile heads — agg_percentiles pins the
-    # same numeric-distribution scan, and dq_profile_drift itself
-    # registers a histogram-per-window comparison this round. Full
-    # pytest parity via testing.demoted_queries() (never a bench
-    # HEADLINE member; note corrected r14).
-    "window_above_customer_avg": window_above_customer_avg,
-    "window_topk_orders_per_customer": window_topk_orders_per_customer,
-    "setops_nations": setops_nations,
-    "q8_market_share": q8_market_share,
-    "q9_product_profit": q9_product_profit,
-    "q11_important_parts": q11_important_parts,
-    "q16_supplier_cardinality": q16_supplier_cardinality,
-    "q17_small_qty_revenue": q17_small_qty_revenue,
-    "q20_excess_shippers": q20_excess_shippers,
-    "q21_waiting_suppliers": q21_waiting_suppliers,
-}
-
-ORACLES = {
-    "q1_pricing_summary": Q1_ORACLE,
-    "q3_shipping_priority": Q3_ORACLE,
-    "q5_region_revenue": Q5_ORACLE,
-    "q6_revenue_filter": Q6_ORACLE,
-    "q2_top_supplier_per_nation": Q2_ORACLE,
-    "q4_order_priority": Q4_ORACLE,
-    "q7_nation_volume": Q7_ORACLE,
-    "q10_returned_items": Q10_ORACLE,
-    "q12_shipmode_priority": Q12_ORACLE,
-    "q13_order_count_distribution": Q13_ORACLE,
-    "join_full_outer_nation_presence": JOIN_FULL_OUTER_ORACLE,
-    "q14_promo_revenue": Q14_ORACLE,
-    "q15_top_supplier": Q15_ORACLE,
-    "q18_large_volume_customers": Q18_ORACLE,
-    "q19_disjunctive_filter": Q19_ORACLE,
-    "window_rolling_7d": WINDOW_ROLLING_7D_ORACLE,
-    "q22_idle_customers": Q22_ORACLE,
-    "scalar_functions": SCALAR_FUNCTIONS_ORACLE,
-    "join_semi_discounted": JOIN_SEMI_ORACLE,
-    "join_anti_customers_without_orders": JOIN_ANTI_ORACLE,
-    "join_broadcast_brand_revenue": JOIN_BROADCAST_ORACLE,
-    "agg_distinct_counts": AGG_DISTINCT_ORACLE,
-    # agg_cube_lineitem demoted r13 — see QUERIES comment
-    "agg_grouping_sets": AGG_GROUPING_SETS_ORACLE,
-    # agg_approx_distinct demoted r14 — see QUERIES comment
-    "agg_conditional_pivot": AGG_PIVOT_ORACLE,
-    "agg_percentiles": AGG_PERCENTILES_ORACLE,
-    # agg_histogram demoted r11 — see QUERIES comment
-    "window_above_customer_avg": WINDOW_ABOVE_AVG_ORACLE,
-    "window_topk_orders_per_customer": WINDOW_TOPK_ORACLE,
-    "setops_nations": SETOPS_ORACLE,
-    "q8_market_share": Q8_ORACLE,
-    "q9_product_profit": Q9_ORACLE,
-    "q11_important_parts": Q11_ORACLE,
-    "q16_supplier_cardinality": Q16_ORACLE,
-    "q17_small_qty_revenue": Q17_ORACLE,
-    "q20_excess_shippers": Q20_ORACLE,
-    "q21_waiting_suppliers": Q21_ORACLE,
-}
-
-
 def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-digest-style percentile sketch (approx_percentile) made
     oracle-checkable the same way as agg_approx_distinct: emit the exact
@@ -1589,7 +1465,6 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
 
-# Registered after every module's main dict (no driver-window slot).
 def window_ntile_customer_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer-value deciles: rank customers by total spend, NTILE(10),
     then per-decile totals — the segmentation query behind every
@@ -3429,66 +3304,102 @@ FROM agg ORDER BY src
 DQ_SNAPSHOT_DIFF_ORACLE = _snapshot_diff_oracle()
 
 
-# join_fuzzy_recall was DEMOTED to pytest-only parity in round 6
-# (tests/test_oracle_parity.py DEMOTED map): it recomputes
-# join_fuzzy_part_names' banded pairs against the unbanded ground
-# truth — a metric twin whose semantics the registered sibling's hash
-# already pins. Same rationale as sim_ivf_recall.
-TAIL_QUERIES = {
-    # agg_approx_percentile DEMOTED round 12 (capacity rule, matching
-    # the dq_k_anonymity registration): sketch sibling of the
-    # registered exact-percentile heads, and its approx_percentile
-    # surface stays pinned by the registered ev_quantile_sketch. Full
-    # pytest parity via testing.demoted_queries() (never a bench
-    # HEADLINE member; note corrected r14).
-    # window_ntile_customer_deciles DEMOTED round 12 (capacity rule,
-    # matching the agg_ols_trend registration): rank-derivative of the
-    # registered window_percent_rank_suppliers — the same
-    # customer-keyed rank scan with an ntile head instead of
-    # percent_rank. Full pytest parity via testing.demoted_queries().
+QUERIES = {
+    "q12_shipmode_priority": q12_shipmode_priority,
+    "q1_pricing_summary": q1_pricing_summary,
+    "q3_shipping_priority": q3_shipping_priority,
+    "q5_region_revenue": q5_region_revenue,
+    "q6_revenue_filter": q6_revenue_filter,
+    "q14_promo_revenue": q14_promo_revenue,
+    "join_broadcast_brand_revenue": join_broadcast_brand_revenue,
+    "window_rolling_7d": window_rolling_7d,
+    "q2_top_supplier_per_nation": q2_top_supplier_per_nation,
+    "q4_order_priority": q4_order_priority,
+    "q7_nation_volume": q7_nation_volume,
+    "q10_returned_items": q10_returned_items,
+    "q13_order_count_distribution": q13_order_count_distribution,
+    "join_full_outer_nation_presence": join_full_outer_nation_presence,
+    "q15_top_supplier": q15_top_supplier,
+    "q18_large_volume_customers": q18_large_volume_customers,
+    "q19_disjunctive_filter": q19_disjunctive_filter,
+    "q22_idle_customers": q22_idle_customers,
+    "scalar_functions": scalar_functions,
+    "join_semi_discounted": join_semi_discounted,
+    "join_anti_customers_without_orders": join_anti_customers_without_orders,
+    "agg_distinct_counts": agg_distinct_counts,
+    "agg_grouping_sets": agg_grouping_sets,
+    "agg_conditional_pivot": agg_conditional_pivot,
+    "agg_percentiles": agg_percentiles,
+    "window_above_customer_avg": window_above_customer_avg,
+    "window_topk_orders_per_customer": window_topk_orders_per_customer,
+    "setops_nations": setops_nations,
+    "q8_market_share": q8_market_share,
+    "q9_product_profit": q9_product_profit,
+    "q11_important_parts": q11_important_parts,
+    "q16_supplier_cardinality": q16_supplier_cardinality,
+    "q17_small_qty_revenue": q17_small_qty_revenue,
+    "q20_excess_shippers": q20_excess_shippers,
+    "q21_waiting_suppliers": q21_waiting_suppliers,
     "join_fuzzy_part_names": join_fuzzy_part_names,
     "unpivot_lineitem_measures": unpivot_lineitem_measures,
     "agg_mode_source_by_lang": agg_mode_source_by_lang,
     "window_percent_rank_suppliers": window_percent_rank_suppliers,
-    # round-8 registration (prebuilt round 7; single-partition NTILE
-    # rewritten to the global_row_number range-shuffle pattern before
-    # registering — VERDICT r7 #3. Matching demotion: ref_clean_price.)
     "agg_rfm_segments": agg_rfm_segments,
-    # round-9 registrations (prebuilt r7/r8, pytest-oracle green with
-    # probe + edge-corpus rows before earning a slot. Matching
-    # demotions: ref_clean_rating (dq_expectations), ref_clean_colors
-    # (agg_basket_lift) — rationale at plans/reference_parity.py.)
     "dq_expectations": dq_expectations,
     "agg_basket_lift": agg_basket_lift,
-    # round-11 registration (r11 bank, prebuilt + pytest-oracle-green
-    # since r9, sf0.1 hash-swept on final r10 code; 1e15-ppm
-    # saturation cap). Matching demotion: agg_histogram at QUERIES
-    # above — capacity rule, net registry growth zero.
     "dq_profile_drift": dq_profile_drift,
-    # round-12 registrations (r12 bank, prebuilt + pytest-oracle-green
-    # since the r9 continuation session, sf0.1 hash-swept on final r11
-    # code — the floor-div helpers both consume changed guard-only in
-    # r11, evidence re-earned per SCALING.md r11). Matching demotions:
-    # agg_approx_percentile + window_ntile_customer_deciles above —
-    # capacity rule, net registry growth zero; both demotions are also
-    # IN the r12 mandatory set, freeing the window slots the ledger
-    # arithmetic needs (48 - 4 + 4 = 48 with 2 canaries).
     "dq_k_anonymity": dq_k_anonymity,
     "agg_ols_trend": agg_ols_trend,
-    # round-14 registration (r14 bank, built in the round-12
-    # continuation session with its full evidence kit — pytest-oracle
-    # at 3 SFs, add/remove/change/no-op edge corpora, sf0.1
-    # judge-swept every round since; matching demotion:
-    # agg_approx_distinct at QUERIES above — capacity rule, net
-    # registry growth zero). Content-level corpus snapshot diff — the
-    # CDC twin of dq_embedding_drift on text: each snapshot reduces to
-    # (doc_id, source, md5(text), chars), the reductions FULL OUTER
-    # equi-join on doc_id (32-byte digests through the shuffle, never
-    # document bodies), and every doc classifies exactly one way into
-    # added/deleted/changed/unchanged with null-safe hash compare.
     "dq_snapshot_diff": dq_snapshot_diff,
+    "join_fuzzy_recall": join_fuzzy_recall,
+    "window_lag_events": window_lag_events,
+    "orderby_limit_top_orders": orderby_limit_top_orders,
+    "agg_rollup_orders": agg_rollup_orders,
+    "agg_salted_sum": agg_salted_sum,
+    "window_running_total": window_running_total,
+    "agg_histogram": agg_histogram,
+    "agg_approx_percentile": agg_approx_percentile,
+    "window_ntile_customer_deciles": window_ntile_customer_deciles,
+    "agg_cube_lineitem": agg_cube_lineitem,
+    "agg_approx_distinct": agg_approx_distinct,
 }
-TAIL_ORACLES = {
+
+ORACLES = {
+    "q1_pricing_summary": Q1_ORACLE,
+    "q3_shipping_priority": Q3_ORACLE,
+    "q5_region_revenue": Q5_ORACLE,
+    "q6_revenue_filter": Q6_ORACLE,
+    "q2_top_supplier_per_nation": Q2_ORACLE,
+    "q4_order_priority": Q4_ORACLE,
+    "q7_nation_volume": Q7_ORACLE,
+    "q10_returned_items": Q10_ORACLE,
+    "q12_shipmode_priority": Q12_ORACLE,
+    "q13_order_count_distribution": Q13_ORACLE,
+    "join_full_outer_nation_presence": JOIN_FULL_OUTER_ORACLE,
+    "q14_promo_revenue": Q14_ORACLE,
+    "q15_top_supplier": Q15_ORACLE,
+    "q18_large_volume_customers": Q18_ORACLE,
+    "q19_disjunctive_filter": Q19_ORACLE,
+    "window_rolling_7d": WINDOW_ROLLING_7D_ORACLE,
+    "q22_idle_customers": Q22_ORACLE,
+    "scalar_functions": SCALAR_FUNCTIONS_ORACLE,
+    "join_semi_discounted": JOIN_SEMI_ORACLE,
+    "join_anti_customers_without_orders": JOIN_ANTI_ORACLE,
+    "join_broadcast_brand_revenue": JOIN_BROADCAST_ORACLE,
+    "agg_distinct_counts": AGG_DISTINCT_ORACLE,
+    "agg_grouping_sets": AGG_GROUPING_SETS_ORACLE,
+    "agg_conditional_pivot": AGG_PIVOT_ORACLE,
+    "agg_percentiles": AGG_PERCENTILES_ORACLE,
+    "window_above_customer_avg": WINDOW_ABOVE_AVG_ORACLE,
+    "window_topk_orders_per_customer": WINDOW_TOPK_ORACLE,
+    "setops_nations": SETOPS_ORACLE,
+    "q8_market_share": Q8_ORACLE,
+    "q9_product_profit": Q9_ORACLE,
+    "q11_important_parts": Q11_ORACLE,
+    "q16_supplier_cardinality": Q16_ORACLE,
+    "q17_small_qty_revenue": Q17_ORACLE,
+    "q20_excess_shippers": Q20_ORACLE,
+    "q21_waiting_suppliers": Q21_ORACLE,
     "join_fuzzy_part_names": JOIN_FUZZY_ORACLE,
     "unpivot_lineitem_measures": UNPIVOT_ORACLE,
     "agg_mode_source_by_lang": AGG_MODE_ORACLE,
@@ -3500,4 +3411,15 @@ TAIL_ORACLES = {
     "dq_k_anonymity": DQ_K_ANONYMITY_ORACLE,
     "agg_ols_trend": AGG_OLS_TREND_ORACLE,
     "dq_snapshot_diff": DQ_SNAPSHOT_DIFF_ORACLE,
+    "join_fuzzy_recall": JOIN_FUZZY_RECALL_ORACLE,
+    "window_lag_events": WINDOW_LAG_ORACLE,
+    "orderby_limit_top_orders": ORDERBY_LIMIT_ORACLE,
+    "agg_rollup_orders": AGG_ROLLUP_ORACLE,
+    "agg_salted_sum": AGG_SALTED_ORACLE,
+    "window_running_total": WINDOW_RUNNING_ORACLE,
+    "agg_histogram": AGG_HISTOGRAM_ORACLE,
+    "agg_approx_percentile": AGG_APPROX_PERCENTILE_ORACLE,
+    "window_ntile_customer_deciles": WINDOW_NTILE_ORACLE,
+    "agg_cube_lineitem": AGG_CUBE_ORACLE,
+    "agg_approx_distinct": AGG_APPROX_DISTINCT_ORACLE,
 }

@@ -983,24 +983,6 @@ FROM q GROUP BY vec_id ORDER BY vec_id
 """
 
 
-QUERIES = {
-    "sim_knn_brute": sim_knn_brute,
-    "sim_ann_lsh": sim_ann_lsh,
-    "sim_centroids_by_label": sim_centroids_by_label,
-    # sim_ivf_topk DEMOTED round 8 (capacity rule, one per r8
-    # registration): its cell-probe stage is a component of the
-    # registered sim_ivfpq_topk; full pytest parity retained via
-    # testing.demoted_queries().
-    "dedup_embedding_cosine": dedup_embedding_cosine,
-}
-
-ORACLES = {
-    "sim_knn_brute": SIM_KNN_ORACLE,
-    "sim_ann_lsh": SIM_ANN_ORACLE,
-    "sim_centroids_by_label": SIM_CENTROIDS_ORACLE,
-    "dedup_embedding_cosine": DEDUP_EMB_COSINE_ORACLE,
-}
-
 PQ_SUBDIM = 16  # 64 dims -> 4 subspaces of 16
 PQ_SUBSPACES = 64 // PQ_SUBDIM
 
@@ -1481,8 +1463,6 @@ SELECT q_id, q_cell AS cell, vec_id, round(d2, 6) AS adc_d2, rn FROM (
 """
 
 
-# Registered after every module's main dict (no driver-window slot):
-# derivative metric queries, fully covered by the local parity suite.
 # --- SemDeDup-style semantic dedup ----------------------------------------
 # Cluster-then-prune (Abbas et al. 2023, "SemDeDup"): assign every vector
 # to its nearest centroid, compare pairs only WITHIN a cluster, and keep
@@ -2595,65 +2575,42 @@ FROM means ORDER BY dim
 DQ_EMBEDDING_DRIFT_ORACLE = _emb_drift_oracle()
 
 
-# sim_ivf_recall was DEMOTED to pytest-only parity in round 6
-# (tests/test_oracle_parity.py DEMOTED map): it is a pure composition
-# of three registered, driver-green queries (sim_knn_brute,
-# sim_ivf_topk, sim_ann_lsh), so its semantics are fully pinned by
-# their hashes — a registry slot adds no new driver signal, and the
-# rotation-window capacity goes to operators with independent logic.
-TAIL_QUERIES = {
+QUERIES = {
+    "sim_knn_brute": sim_knn_brute,
+    "sim_ann_lsh": sim_ann_lsh,
+    "sim_centroids_by_label": sim_centroids_by_label,
+    "dedup_embedding_cosine": dedup_embedding_cosine,
     "sim_quantize_int8": sim_quantize_int8,
     "sim_pq_adc": sim_pq_adc,
     "sim_ivfpq_topk": sim_ivfpq_topk,
     "dedup_semdedup": dedup_semdedup,
-    # sim_mrl_recall DEMOTED round 15 (capacity rule, matching the
-    # sim_knn_graph registration below): a recall-meter
-    # rank-derivative — the registered sim_rp_recall pins the
-    # IDENTICAL exact-brute-force-vs-projection recall harness (same
-    # corpus, same top-k join, same ratio head) with random projection
-    # in place of Matryoshka truncation, and the truncation arithmetic
-    # itself is a two-line prefix slice. Full pytest parity via
-    # testing.demoted_queries(); the op never had a bench HEADLINE
-    # row (sim_rp_recall carries the recall-harness perf trend).
     "sim_kmeans_lloyd": sim_kmeans_lloyd,
     "sim_rp_recall": sim_rp_recall,
-    # round-10 registration (prebuilt + pytest-oracle-green since r8,
-    # 0.95-boundary fuzz swept r9; matching demotion:
-    # agg_salted_sum at plans/relational.py QUERIES)
     "train_hard_negatives": train_hard_negatives,
-    # round-13 registration (r13 bank, built round 12 with its full
-    # evidence kit — pytest-oracle at 3 SFs, corruption-zoo edge
-    # corpus, NaN/Inf/clamp hypothesis fuzz, no-join/no-window plan
-    # row, probe 0.21/0.34@256 under the fixed instrument; matching
-    # demotion: ev_countmin_users at plans/events.py TAIL_QUERIES —
-    # capacity rule, net registry growth zero). Per-dimension
-    # embedding-snapshot drift: the dq_profile_drift cap discipline
-    # on vectors.
     "dq_embedding_drift": dq_embedding_drift,
-    # round-15 registration (r15 bank, built in the round-12
-    # continuation session with its full evidence kit — pytest-oracle
-    # at 3 SFs, dup-injected recall corpus, sf0.1 judge-swept every
-    # round since; matching demotion: sim_mrl_recall above — capacity
-    # rule, net registry growth zero). Corpus k-NN graph construction,
-    # the SemDeDup precursor, registered WITH its measured recall
-    # CONTRACT (VERDICT r13 #3 / r14 watch-item #1): this is a
-    # NEAR-DUPLICATE / eps-ball graph, NOT a general ANN index —
-    # planted-duplicate recall 1.0 and general recall@5 < 0.5 are
-    # pinned executable in
-    # tests/test_new_ops_invariants.py::test_knn_graph_recall_contract,
-    # and the multi-band OR-amplification measurement routing general
-    # ANN use to the IVF/PQ family is cited in the function docstring.
     "sim_knn_graph": sim_knn_graph,
+    "sim_ivf_recall": sim_ivf_recall,
+    "sim_ivf_topk": sim_ivf_topk,
+    "sim_mrl_recall": sim_mrl_recall,
+    "sim_knn_components": sim_knn_components,
 }
-TAIL_ORACLES = {
+
+ORACLES = {
+    "sim_knn_brute": SIM_KNN_ORACLE,
+    "sim_ann_lsh": SIM_ANN_ORACLE,
+    "sim_centroids_by_label": SIM_CENTROIDS_ORACLE,
+    "dedup_embedding_cosine": DEDUP_EMB_COSINE_ORACLE,
     "sim_quantize_int8": SIM_QUANTIZE_ORACLE,
     "sim_pq_adc": SIM_PQ_ORACLE,
     "sim_ivfpq_topk": SIM_IVFPQ_ORACLE,
     "dedup_semdedup": DEDUP_SEMDEDUP_ORACLE,
-    # sim_mrl_recall demoted r15 — see TAIL_QUERIES comment
     "sim_kmeans_lloyd": SIM_KMEANS_ORACLE,
     "sim_rp_recall": SIM_RP_RECALL_ORACLE,
     "train_hard_negatives": TRAIN_HARD_NEGATIVES_ORACLE,
     "dq_embedding_drift": DQ_EMBEDDING_DRIFT_ORACLE,
     "sim_knn_graph": SIM_KNN_GRAPH_ORACLE,
+    "sim_ivf_recall": SIM_IVF_RECALL_ORACLE,
+    "sim_ivf_topk": SIM_IVF_ORACLE,
+    "sim_mrl_recall": SIM_MRL_RECALL_ORACLE,
+    "sim_knn_components": SIM_KNN_COMPONENTS_ORACLE,
 }

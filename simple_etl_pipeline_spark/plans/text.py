@@ -1415,67 +1415,6 @@ GROUP BY lang ORDER BY lang
 """
 
 
-QUERIES = {
-    "txt_token_stats": txt_token_stats,
-    "txt_doc_features": txt_doc_features,
-    "txt_langid": txt_langid,
-    # txt_ngram_freq DEMOTED round 11 (capacity rule, one per r11
-    # registration — matching train_token_budget_pack): its
-    # bigram-shingle explode is pinned by the registered
-    # dedup_ngram_jaccard / dedup_ngram_spans shingle pipeline, and
-    # its global top-K head by the registered q15/q18
-    # TakeOrderedAndProject rows; full pytest parity continues via
-    # testing.demoted_queries() (never a bench HEADLINE member;
-    # note corrected r14).
-    "txt_tfidf_top_term": txt_tfidf_top_term,
-    # txt_fingerprint DEMOTED round 14 (capacity rule, one per r14
-    # registration — matching train_binpack_shelves at TAIL_QUERIES):
-    # a bare per-doc projection of fingerprint_col over
-    # corpus_with_dups — the registered dedup_exact aggregates the
-    # IDENTICAL fingerprint column over the IDENTICAL corpus, pinning
-    # the fingerprint multiset and the survivor pairing; full pytest
-    # parity continues via testing.demoted_queries() (not a bench
-    # HEADLINE member — no perf trend ends with this demotion).
-    "dedup_exact": dedup_exact,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_minhash_lsh": dedup_minhash_lsh,
-    # dedup_minhash_ml: pytest-only (Spark-internal hash seeds can never
-    # hash-match DuckDB) — see tests/test_retrieval.py.
-    "dedup_simhash": dedup_simhash,
-    # dedup_simhash_pairs DEMOTED round 8 (capacity rule, one per r8
-    # registration): dedup_simhash (registered, same Hamming-band
-    # signature pipeline) pins the shared semantics; the pair
-    # expansion keeps full pytest parity via testing.demoted_queries().
-    "dedup_components": dedup_components,
-    "txt_training_corpus": txt_training_corpus,
-    "txt_bpe_tokens": txt_bpe_tokens,
-    "txt_winnow_fingerprint": txt_winnow_fingerprint,
-}
-
-ORACLES = {
-    "txt_token_stats": TXT_TOKEN_STATS_ORACLE,
-    "txt_doc_features": TXT_DOC_FEATURES_ORACLE,
-    "txt_langid": _langid_oracle(),
-    # txt_ngram_freq demoted r11 — see QUERIES comment
-    "txt_tfidf_top_term": TXT_TFIDF_ORACLE,
-    # txt_fingerprint demoted r14 — see QUERIES comment
-    "dedup_exact": DEDUP_EXACT_ORACLE,
-    "dedup_ngram_jaccard": DEDUP_JACCARD_ORACLE,
-    "dedup_minhash_lsh": DEDUP_MINHASH_ORACLE,
-    # dedup_minhash_ml: Spark-internal hash seeds — rows-only by design
-    "dedup_simhash": DEDUP_SIMHASH_ORACLE,
-    "dedup_components": DEDUP_COMPONENTS_ORACLE,
-    "txt_training_corpus": TXT_TRAINING_CORPUS_ORACLE,
-    "txt_bpe_tokens": TXT_BPE_TOKENS_ORACLE,
-    "txt_winnow_fingerprint": TXT_WINNOW_ORACLE,
-}
-
-
-# ==========================================================================
-# TAIL queries — registered after every module's main dict so they never
-# consume a driver check-window slot (see __spark_entry__.queries()).
-# ==========================================================================
-
 # --- PII detection / redaction --------------------------------------------
 PII_EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PII_PHONE_RE = r"\b\d{3}-\d{4}-\d{4}\b"
@@ -2144,7 +2083,7 @@ ORDER BY m.lang
 """
 
 
-# --- repetition quality rule (TAIL: no driver-window slot) ----------------
+# --- repetition quality rule ----------------------------------------------
 REP_NGRAM = 2
 REP_MAX_RATIO = 0.2
 
@@ -2214,7 +2153,7 @@ ORDER BY d.doc_id
 """
 
 
-# --- context-window chunking (TAIL: no driver-window slot) ----------------
+# --- context-window chunking ----------------------------------------------
 CHUNK_TOKENS = 64
 CHUNK_STRIDE = 48  # 16-token overlap between consecutive chunks
 
@@ -2276,7 +2215,7 @@ FROM s ORDER BY doc_id, chunk_idx
 """
 
 
-# --- dataset card (TAIL: no driver-window slot) ---------------------------
+# --- dataset card ---------------------------------------------------------
 def txt_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus datasheet in ONE pass: per-language rows plus an overall
     rollup row, each with doc/token/source counts and the exact-dup rate
@@ -3647,9 +3586,6 @@ ORDER BY dsir_ppm DESC, doc_id ASC LIMIT {DSIR_TOP_K}
 
 
 # --- lexical retrieval --------------------------------------------------
-# Built round 4 with pytest oracles (tests/test_retrieval.py); registered
-# in queries()/oracle_sql() round 5 with window slots, per the round-4
-# rotation ledger.
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOP_K = 5
@@ -5371,12 +5307,22 @@ ORDER BY source
 """
 
 
-# dedup_minhash_ml is pytest-only (tests/test_retrieval.py): its
-# Spark-internal MinHashLSH seeds can never hash-match a DuckDB oracle,
-# so it would be a permanently oracle-dark registry entry. The
-# hash-checked dedup_minhash_lsh twin covers the semantics in the
-# driver gate; the library comparison lives in the test suite.
-TAIL_QUERIES = {
+# dedup_minhash_ml is not registered: its Spark-internal MinHashLSH seeds
+# can never hash-match a DuckDB oracle. tests/test_retrieval.py compares
+# it with the hash-checked dedup_minhash_lsh twin instead.
+QUERIES = {
+    "txt_token_stats": txt_token_stats,
+    "txt_doc_features": txt_doc_features,
+    "txt_langid": txt_langid,
+    "txt_tfidf_top_term": txt_tfidf_top_term,
+    "dedup_exact": dedup_exact,
+    "dedup_ngram_jaccard": dedup_ngram_jaccard,
+    "dedup_minhash_lsh": dedup_minhash_lsh,
+    "dedup_simhash": dedup_simhash,
+    "dedup_components": dedup_components,
+    "txt_training_corpus": txt_training_corpus,
+    "txt_bpe_tokens": txt_bpe_tokens,
+    "txt_winnow_fingerprint": txt_winnow_fingerprint,
     "txt_dataset_card": txt_dataset_card,
     "txt_repetition_filter": txt_repetition_filter,
     "txt_chunk_windows": txt_chunk_windows,
@@ -5386,23 +5332,11 @@ TAIL_QUERIES = {
     "txt_pack_sequences": txt_pack_sequences,
     "dedup_incremental": dedup_incremental,
     "dedup_survivors_quality": dedup_survivors_quality,
-    # txt_mixture_weights was DEMOTED to pytest-only parity in round 6
-    # (tests/test_oracle_parity.py DEMOTED map): txt_mixture_manifest
-    # (driver-green r5) computes the identical per-stratum
-    # (n_docs, sum_tokens) aggregate as its first stage, so the weights
-    # query's only unpinned content was two ratios of those columns.
     "txt_gopher_quality": txt_gopher_quality,
     "dedup_paragraphs": dedup_paragraphs,
     "txt_pagerank": txt_pagerank,
     "dedup_components_lsh": dedup_components_lsh,
     "txt_rare_token_ratio": txt_rare_token_ratio,
-    # txt_bloom_contamination DEMOTED round 13 (capacity rule, one per
-    # r13 registration — matching train_attention_pack below): its
-    # 4096-bit bit_or Bloom construction stays pinned by the registered
-    # skip_bloom_stats (the same shared word fold) and its
-    # contamination-decision head by the registered txt_contamination,
-    # the exact-shingle oracle of record; full pytest parity continues
-    # via testing.demoted_queries().
     "txt_triangle_count": txt_triangle_count,
     "dedup_ngram_spans": dedup_ngram_spans,
     "txt_dsir_weights": txt_dsir_weights,
@@ -5411,64 +5345,38 @@ TAIL_QUERIES = {
     "weighted_sample": weighted_sample,
     "txt_mixture_manifest": txt_mixture_manifest,
     "txt_gopher_repetition": txt_gopher_repetition,
-    # txt_char_entropy DEMOTED round 9 (capacity rule, one per r9
-    # registration — matching train_curriculum_order): it is a
-    # component of the registered txt_doc_features feature set, whose
-    # driver hash pins the shared char-distribution explode; full
-    # pytest parity continues via testing.demoted_queries(), and its
-    # bench row survives (bench resolves demoted queries).
     "txt_kl_drift": txt_kl_drift,
     "train_shard_manifest": train_shard_manifest,
-    # round-8 registration (prebuilt + pytest-oracle-green in round 7;
-    # matching demotion: dedup_simhash_pairs, see QUERIES above)
     "txt_domain_split": txt_domain_split,
-    # round-9 registrations (prebuilt r8; matching demotions:
-    # txt_char_entropy above and ev_tumbling_hourly at
-    # plans/events.py — search_hybrid_rrf reuses the registered
-    # bm25_topk's _bm25_per_doc pipeline UNCHANGED, so the bm25_topk
-    # fp-bit-identical evidence from r8 still stands; the shared-code
-    # canary rule fires only if the fusion work edits that pipeline)
     "train_curriculum_order": train_curriculum_order,
     "search_hybrid_rrf": search_hybrid_rrf,
-    # round-10 registration (prebuilt + pytest-oracle-green since r8;
-    # matching demotion: window_running_total et al. at
-    # plans/relational.py QUERIES — capacity rule, net registry
-    # growth zero)
     "txt_lm_perplexity": txt_lm_perplexity,
-    # round-11 registration (r11 bank, prebuilt + pytest-oracle-green
-    # since r9, sf0.1 hash-swept on final r10 code; matching demotion:
-    # txt_ngram_freq at QUERIES above — capacity rule, net registry
-    # growth zero). global_prefix_sum's first driver surface.
     "train_token_budget_pack": train_token_budget_pack,
-    # round-12 registration (r12 bank, prebuilt + pytest-oracle-green
-    # since the r9 continuation session, sf0.1 hash-swept on final r11
-    # code; matching demotion: ev_session_windows at plans/events.py
-    # QUERIES — capacity rule, net registry growth zero). C4-style
-    # cross-document boilerplate-line removal: line-hash agg +
-    # join-back, never a window on heavy line keys.
     "txt_boilerplate_lines": txt_boilerplate_lines,
-    # round-13 registration (r13 bank, built round 12 with its full
-    # evidence kit — pytest-oracle at 3 SFs, boundary-exact/straddler
-    # edge corpus, barrier plan-shape row, probe 0.16/0.29@256 under
-    # the fixed instrument; matching demotion:
-    # txt_bloom_contamination above — capacity rule, net registry
-    # growth zero). Attention-mask sequence packing:
-    # global_prefix_sum's fifth driver surface.
     "train_attention_pack": train_attention_pack,
-    # round-14 registration (r14 bank, built in the round-12
-    # continuation session with its full evidence kit — pytest-oracle
-    # at 3 SFs, boundary/degenerate edge corpus, barrier plan-shape
-    # row forbidding any band-partitioned window, sf0.1 judge-swept
-    # every round since; matching demotion: txt_fingerprint at
-    # QUERIES above — capacity rule, net registry growth zero).
-    # Pad-minimizing whole-document shelf packing:
-    # global_row_number's sixth driver surface, ranked over the
-    # (band_len, doc_id) total order with the <= 13-row band-offsets
-    # frame coming back on broadcast joins.
     "train_binpack_shelves": train_binpack_shelves,
+    "txt_mixture_weights": txt_mixture_weights,
+    "dedup_simhash_pairs": dedup_simhash_pairs,
+    "txt_char_entropy": txt_char_entropy,
+    "txt_ngram_freq": txt_ngram_freq,
+    "txt_bloom_contamination": txt_bloom_contamination,
+    "txt_fingerprint": txt_fingerprint,
+    "train_eval_decontam_report": train_eval_decontam_report,
 }
 
-TAIL_ORACLES = {
+ORACLES = {
+    "txt_token_stats": TXT_TOKEN_STATS_ORACLE,
+    "txt_doc_features": TXT_DOC_FEATURES_ORACLE,
+    "txt_langid": _langid_oracle(),
+    "txt_tfidf_top_term": TXT_TFIDF_ORACLE,
+    "dedup_exact": DEDUP_EXACT_ORACLE,
+    "dedup_ngram_jaccard": DEDUP_JACCARD_ORACLE,
+    "dedup_minhash_lsh": DEDUP_MINHASH_ORACLE,
+    "dedup_simhash": DEDUP_SIMHASH_ORACLE,
+    "dedup_components": DEDUP_COMPONENTS_ORACLE,
+    "txt_training_corpus": TXT_TRAINING_CORPUS_ORACLE,
+    "txt_bpe_tokens": TXT_BPE_TOKENS_ORACLE,
+    "txt_winnow_fingerprint": TXT_WINNOW_ORACLE,
     "txt_dataset_card": TXT_DATASET_CARD_ORACLE,
     "txt_repetition_filter": TXT_REPETITION_ORACLE,
     "txt_chunk_windows": TXT_CHUNK_ORACLE,
@@ -5501,4 +5409,11 @@ TAIL_ORACLES = {
     "txt_boilerplate_lines": TXT_BOILERPLATE_ORACLE,
     "train_attention_pack": TRAIN_ATTENTION_PACK_ORACLE,
     "train_binpack_shelves": TRAIN_BINPACK_SHELVES_ORACLE,
+    "txt_mixture_weights": TXT_MIXTURE_WEIGHTS_ORACLE,
+    "dedup_simhash_pairs": _simhash_pairs_oracle(),
+    "txt_char_entropy": TXT_CHAR_ENTROPY_ORACLE,
+    "txt_ngram_freq": TXT_NGRAM_FREQ_ORACLE,
+    "txt_bloom_contamination": TXT_BLOOM_CONTAMINATION_ORACLE,
+    "txt_fingerprint": TXT_FINGERPRINT_ORACLE,
+    "train_eval_decontam_report": TRAIN_EVAL_DECONTAM_ORACLE,
 }

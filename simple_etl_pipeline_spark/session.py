@@ -38,7 +38,8 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+        shuffle_partitions = int(cpus)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY", "8g")
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -61,7 +62,7 @@ def get_spark(
         # nanos timestamp type — read as long, converted in load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", driver_memory)
         # Fault the whole heap in at JVM start (-Xms == -Xmx +
         # AlwaysPreTouch): the r15 host probe (tools/host_memory_probe.py)
         # measured the hypervisor page-supply path fluctuating 0.06-3.4
@@ -71,14 +72,10 @@ def get_spark(
         # A/B, SCALING.md r15). Pre-touching moves the cost to one
         # bounded startup step so per-query timings measure the queries.
         # On a real cluster the same flags go in
-        # spark.executor.extraJavaOptions. SPARK_GRAFT_PRETOUCH=0 opts
-        # out (e.g. for many short-lived throwaway sessions).
+        # spark.executor.extraJavaOptions.
         .config(
             "spark.driver.extraJavaOptions",
-            "-Xms%s -XX:+AlwaysPreTouch"
-            % os.environ.get("SPARK_DRIVER_MEMORY", "8g")
-            if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") == "1"
-            else "",
+            f"-Xms{driver_memory} -XX:+AlwaysPreTouch",
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -559,29 +559,8 @@ QUERIES = {
     "st_session_windows": st_session_windows,
     "st_dedup_events": st_dedup_events,
     "st_stream_stream_join": st_stream_stream_join,
-    # st_dedup_index DEMOTED round 15 (capacity rule, matching the
-    # mm_bytes_shard_pack registration at plans/multimodal.py
-    # TAIL_QUERIES): its oracle IS the shared DEDUP_EXACT_ORACLE — the
-    # registered st_dedup_lsh_index (streaming/stateful.py) is the
-    # strictly-larger streaming dedup surface (stateful MinHash-LSH
-    # band index vs exact fingerprint index) and the registered
-    # dedup_exact keeps the shared oracle pinned on the batch side.
-    # Full pytest parity via testing.demoted_queries(); bench has
-    # never carried this row (the streaming bench rows are the two
-    # stateful registrations).
+    "st_dedup_index": st_dedup_index,
     "st_static_zscore": st_static_zscore,
-    # round-14 registration (r14 bank, built in the round-12
-    # continuation session with its full evidence kit —
-    # replay-equals-batch at 3 SFs against the REAL batch oracle,
-    # re-earned in r13 after the emb_coords staging fix, sf0.1
-    # judge-swept every round since; matching demotion:
-    # ev_user_daily_activity at plans/events.py QUERIES — capacity
-    # rule, net registry growth zero). Streaming embedding-drift
-    # monitor: the st_static_zscore topology with every expression
-    # IMPORTED from the batch dq_embedding_drift, complete-mode
-    # per-dim state bounded at 64 keys forever; full replay equals
-    # the batch monitor row-for-row, so it SHARES
-    # DQ_EMBEDDING_DRIFT_ORACLE (a real value oracle, not rows-only).
     "st_embedding_drift": st_embedding_drift,
 }
 
@@ -592,8 +571,7 @@ from simple_etl_pipeline_spark.plans.events import EV_ZSCORE_ORACLE
 from simple_etl_pipeline_spark.plans.similarity import (
     DQ_EMBEDDING_DRIFT_ORACLE,
 )
-# (plans.text's DEDUP_EXACT_ORACLE left with the r15 st_dedup_index
-# demotion — testing.demoted_queries() now pairs them directly.)
+from simple_etl_pipeline_spark.plans.text import DEDUP_EXACT_ORACLE
 
 ORACLES = {
     "st_tumbling_hourly": ST_TUMBLING_ORACLE,
@@ -603,11 +581,11 @@ ORACLES = {
     "st_session_windows": EV_SESSION_ORACLE,
     "st_dedup_events": ST_DEDUP_ORACLE,
     "st_stream_stream_join": ST_STREAM_JOIN_ORACLE,
-    # st_dedup_index demoted r15 — see QUERIES comment
+    # The exact-fingerprint index, replayed in full, equals batch dedup.
+    "st_dedup_index": DEDUP_EXACT_ORACLE,
     # Full replay of the stream-static scoring equals the batch monitor.
     "st_static_zscore": EV_ZSCORE_ORACLE,
     # Full replay of the streaming drift monitor equals the batch twin
-    # (every expression imported from plans/similarity — see the
-    # registration comment in QUERIES).
+    # (every expression imported from plans/similarity).
     "st_embedding_drift": DQ_EMBEDDING_DRIFT_ORACLE,
 }

@@ -936,24 +936,14 @@ def st_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES: dict[str, Any] = {
     "st_user_totals_stateful": st_user_totals_stateful,
-    # round-13 registration (r13 bank, built round 12 with its full
-    # evidence kit — pytest-oracle, 2-file cross-batch split corpus,
-    # batch-equivalence row, probe 0.63@256 under the fixed
-    # instrument with the terminal leg attributed; matching demotion:
-    # agg_cube_lineitem at plans/relational.py QUERIES — capacity
-    # rule, net registry growth zero). The first registered query in
-    # the streaming package: incremental MinHash-LSH band-bucket
-    # index under applyInPandasWithState, full replay equals the
-    # batch band index so its oracle is the real DuckDB minhash CTE
-    # chain, not a rows-only check.
     "st_dedup_lsh_index": st_dedup_lsh_index,
+    "st_scd2_users": st_scd2_users,
 }
 ORACLES = {
     "st_user_totals_stateful": ST_USER_TOTALS_ORACLE,
     "st_dedup_lsh_index": ST_DEDUP_LSH_ORACLE,
+    "st_scd2_users": ST_SCD2_ORACLE,
 }
-TAIL_QUERIES: dict[str, Any] = {"st_scd2_users": st_scd2_users}
-TAIL_ORACLES = {"st_scd2_users": ST_SCD2_ORACLE}
 if tws_available():  # see tws_available docstring — env-gated feature
     QUERIES["st_user_totals_tws"] = st_user_totals_tws
     ORACLES["st_user_totals_tws"] = ST_USER_TOTALS_ORACLE

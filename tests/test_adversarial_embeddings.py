@@ -18,39 +18,7 @@ from simple_etl_pipeline_spark.schemas import TESTDATA_TABLES
 from simple_etl_pipeline_spark.testing import compare_with_oracle
 
 QUERIES = entrymod.queries()
-# demoted-from-registry queries stay under the same test discipline
-from simple_etl_pipeline_spark.testing import demoted_queries as _dq  # noqa: E402
-QUERIES.update({k: fn for k, (fn, _) in _dq().items()})
 ORACLES = entrymod.oracle_sql()
-ORACLES.update({k: sql for k, (_, sql) in _dq().items()})
-# banked prebuilds join the gauntlet before they earn a registry slot
-from simple_etl_pipeline_spark.plans.similarity import (  # noqa: E402
-    DQ_EMBEDDING_DRIFT_ORACLE,
-    dq_embedding_drift,
-)
-
-QUERIES["dq_embedding_drift"] = dq_embedding_drift
-ORACLES["dq_embedding_drift"] = DQ_EMBEDDING_DRIFT_ORACLE
-from simple_etl_pipeline_spark.plans.similarity import (  # noqa: E402
-    SIM_KNN_GRAPH_ORACLE,
-    sim_knn_graph,
-)
-from simple_etl_pipeline_spark.streaming.events import (  # noqa: E402
-    st_embedding_drift,
-)
-
-QUERIES["sim_knn_graph"] = sim_knn_graph
-ORACLES["sim_knn_graph"] = SIM_KNN_GRAPH_ORACLE
-from simple_etl_pipeline_spark.plans.similarity import (  # noqa: E402
-    SIM_KNN_COMPONENTS_ORACLE,
-    sim_knn_components,
-)
-
-QUERIES["sim_knn_components"] = sim_knn_components
-ORACLES["sim_knn_components"] = SIM_KNN_COMPONENTS_ORACLE
-QUERIES["st_embedding_drift"] = st_embedding_drift
-# the streaming twin SHARES the batch monitor's value oracle
-ORACLES["st_embedding_drift"] = DQ_EMBEDDING_DRIFT_ORACLE
 
 DIM = 64
 

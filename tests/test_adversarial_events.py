@@ -17,26 +17,7 @@ from simple_etl_pipeline_spark.schemas import TESTDATA_TABLES
 from simple_etl_pipeline_spark.testing import compare_with_oracle
 
 QUERIES = entrymod.queries()
-# demoted-from-registry queries stay under the same test discipline
-from simple_etl_pipeline_spark.testing import demoted_queries as _dq  # noqa: E402
-QUERIES.update({k: fn for k, (fn, _) in _dq().items()})
 ORACLES = entrymod.oracle_sql()
-ORACLES.update({k: sql for k, (_, sql) in _dq().items()})
-# banked prebuilds join the gauntlet before they earn a registry slot
-from simple_etl_pipeline_spark.plans.events import (  # noqa: E402
-    EV_MAD_OUTLIERS_ORACLE,
-    ev_mad_outliers,
-)
-
-QUERIES["ev_mad_outliers"] = ev_mad_outliers
-ORACLES["ev_mad_outliers"] = EV_MAD_OUTLIERS_ORACLE
-from simple_etl_pipeline_spark.plans.events import (  # noqa: E402
-    EV_CHANGEPOINT_CUSUM_ORACLE,
-    ev_changepoint_cusum,
-)
-
-QUERIES["ev_changepoint_cusum"] = ev_changepoint_cusum
-ORACLES["ev_changepoint_cusum"] = EV_CHANGEPOINT_CUSUM_ORACLE
 
 _T0 = dt.datetime(2024, 3, 1, 0, 0, 0)
 

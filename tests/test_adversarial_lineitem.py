@@ -18,11 +18,7 @@ from simple_etl_pipeline_spark.schemas import TESTDATA_TABLES
 from simple_etl_pipeline_spark.testing import compare_with_oracle
 
 QUERIES = entrymod.queries()
-# demoted-from-registry queries stay under the same test discipline
-from simple_etl_pipeline_spark.testing import demoted_queries as _dq  # noqa: E402
-QUERIES.update({k: fn for k, (fn, _) in _dq().items()})
 ORACLES = entrymod.oracle_sql()
-ORACLES.update({k: sql for k, (_, sql) in _dq().items()})
 
 ADVERSARIAL_LI_QUERIES = [
     "q1_pricing_summary",

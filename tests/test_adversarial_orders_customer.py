@@ -35,11 +35,7 @@ from simple_etl_pipeline_spark.schemas import TESTDATA_TABLES
 from simple_etl_pipeline_spark.testing import compare_with_oracle
 
 QUERIES = entrymod.queries()
-# demoted-from-registry queries stay under the same test discipline
-from simple_etl_pipeline_spark.testing import demoted_queries as _dq  # noqa: E402
-QUERIES.update({k: fn for k, (fn, _) in _dq().items()})
 ORACLES = entrymod.oracle_sql()
-ORACLES.update({k: sql for k, (_, sql) in _dq().items()})
 
 ADVERSARIAL_OC_QUERIES = [
     # round-12 registrations — the gauntlet's reason to exist
@@ -53,7 +49,7 @@ ADVERSARIAL_OC_QUERIES = [
     "window_rolling_7d",
     "window_above_customer_avg",
     "window_topk_orders_per_customer",
-    # demoted derivatives stay under the same discipline
+    # rank/order-limit derivatives
     "window_ntile_customer_deciles",
     "orderby_limit_top_orders",
 ]

@@ -15,51 +15,7 @@ from simple_etl_pipeline_spark.testing import compare_with_oracle
 from simple_etl_pipeline_spark.schemas import TESTDATA_TABLES
 
 QUERIES = entrymod.queries()
-# demoted-from-registry queries stay under the same test discipline
-from simple_etl_pipeline_spark.testing import demoted_queries as _dq  # noqa: E402
-QUERIES.update({k: fn for k, (fn, _) in _dq().items()})
 ORACLES = entrymod.oracle_sql()
-ORACLES.update({k: sql for k, (_, sql) in _dq().items()})
-# banked prebuilds join the gauntlet before they earn a registry slot
-from simple_etl_pipeline_spark.plans.text import (  # noqa: E402
-    TRAIN_ATTENTION_PACK_ORACLE,
-    train_attention_pack,
-)
-from simple_etl_pipeline_spark.streaming.stateful import (  # noqa: E402
-    ST_DEDUP_LSH_ORACLE,
-    st_dedup_lsh_index,
-)
-
-QUERIES["train_attention_pack"] = train_attention_pack
-ORACLES["train_attention_pack"] = TRAIN_ATTENTION_PACK_ORACLE
-QUERIES["st_dedup_lsh_index"] = st_dedup_lsh_index
-ORACLES["st_dedup_lsh_index"] = ST_DEDUP_LSH_ORACLE
-from simple_etl_pipeline_spark.plans.multimodal import (  # noqa: E402
-    MM_BYTES_SHARD_PACK_ORACLE,
-    mm_bytes_shard_pack,
-)
-from simple_etl_pipeline_spark.plans.relational import (  # noqa: E402
-    DQ_SNAPSHOT_DIFF_ORACLE,
-    dq_snapshot_diff,
-)
-from simple_etl_pipeline_spark.plans.text import (  # noqa: E402
-    TRAIN_BINPACK_SHELVES_ORACLE,
-    train_binpack_shelves,
-)
-
-QUERIES["train_binpack_shelves"] = train_binpack_shelves
-ORACLES["train_binpack_shelves"] = TRAIN_BINPACK_SHELVES_ORACLE
-QUERIES["dq_snapshot_diff"] = dq_snapshot_diff
-ORACLES["dq_snapshot_diff"] = DQ_SNAPSHOT_DIFF_ORACLE
-QUERIES["mm_bytes_shard_pack"] = mm_bytes_shard_pack
-ORACLES["mm_bytes_shard_pack"] = MM_BYTES_SHARD_PACK_ORACLE
-from simple_etl_pipeline_spark.plans.text import (  # noqa: E402
-    TRAIN_EVAL_DECONTAM_ORACLE,
-    train_eval_decontam_report,
-)
-
-QUERIES["train_eval_decontam_report"] = train_eval_decontam_report
-ORACLES["train_eval_decontam_report"] = TRAIN_EVAL_DECONTAM_ORACLE
 
 EDGE_DOCS = [
     # (doc_id, text, lang, source)

@@ -11,66 +11,6 @@ import __spark_entry__ as entrymod
 from simple_etl_pipeline_spark.schemas import TABLE_SCHEMAS, TESTDATA_TABLES
 
 QUERIES = entrymod.queries()
-# demoted-from-registry queries stay under the same test discipline
-from simple_etl_pipeline_spark.testing import demoted_queries as _dq  # noqa: E402
-QUERIES.update({k: fn for k, (fn, _) in _dq().items()})
-# unregistered prebuilds (r7 trio now registered; r8 trio pending):
-# same discipline either way
-from simple_etl_pipeline_spark.plans import events as _ev  # noqa: E402
-from simple_etl_pipeline_spark.plans import relational as _rel  # noqa: E402
-from simple_etl_pipeline_spark.plans import similarity as _sim  # noqa: E402
-from simple_etl_pipeline_spark.plans import text as _txt  # noqa: E402
-
-QUERIES.update(
-    {
-        n: getattr(_ev, n)
-        for n in (
-            "ev_quantile_sketch",
-            "ev_attribution_linear",
-            "ev_path_transitions",
-            "ev_gap_fill",
-            "ev_hll_overlap",
-        )
-    }
-)
-QUERIES["agg_rfm_segments"] = _rel.agg_rfm_segments
-QUERIES["dq_expectations"] = _rel.dq_expectations
-QUERIES["txt_domain_split"] = _txt.txt_domain_split
-QUERIES["agg_basket_lift"] = _rel.agg_basket_lift
-QUERIES["train_curriculum_order"] = _txt.train_curriculum_order
-QUERIES["search_hybrid_rrf"] = _txt.search_hybrid_rrf
-QUERIES["txt_lm_perplexity"] = _txt.txt_lm_perplexity
-QUERIES["train_hard_negatives"] = _sim.train_hard_negatives
-QUERIES["ev_srm_check"] = _ev.ev_srm_check
-QUERIES["ev_trimmed_mean"] = _ev.ev_trimmed_mean
-QUERIES["train_token_budget_pack"] = _txt.train_token_budget_pack
-QUERIES["ev_time_embargo_split"] = _ev.ev_time_embargo_split
-QUERIES["ev_seasonal_residuals"] = _ev.ev_seasonal_residuals
-QUERIES["dq_profile_drift"] = _rel.dq_profile_drift
-# round-9-built r12 bank
-from simple_etl_pipeline_spark.plans import multimodal as _mm  # noqa: E402
-QUERIES["dq_k_anonymity"] = _rel.dq_k_anonymity
-QUERIES["agg_ols_trend"] = _rel.agg_ols_trend
-QUERIES["txt_boilerplate_lines"] = _txt.txt_boilerplate_lines
-QUERIES["mm_phash_dedup"] = _mm.mm_phash_dedup
-# round-12-built r13 bank (batch members; the streaming member
-# st_dedup_lsh_index is covered by tests/test_streaming.py's
-# constructed-corpus rows, including the zero-shingle corpus)
-QUERIES["train_attention_pack"] = _txt.train_attention_pack
-QUERIES["dq_embedding_drift"] = _sim.dq_embedding_drift
-# round-12-continuation-built r14 bank (batch members; the streaming
-# member st_embedding_drift is covered by its constructed-corpus rows
-# in tests/test_streaming.py, including the empty-stream corpus)
-QUERIES["train_binpack_shelves"] = _txt.train_binpack_shelves
-QUERIES["dq_snapshot_diff"] = _rel.dq_snapshot_diff
-# r15 bank (also r12-continuation-built)
-QUERIES["ev_mad_outliers"] = _ev.ev_mad_outliers
-QUERIES["sim_knn_graph"] = _sim.sim_knn_graph
-QUERIES["mm_bytes_shard_pack"] = _mm.mm_bytes_shard_pack
-# r16 bank (same session)
-QUERIES["sim_knn_components"] = _sim.sim_knn_components
-QUERIES["train_eval_decontam_report"] = _txt.train_eval_decontam_report
-QUERIES["ev_changepoint_cusum"] = _ev.ev_changepoint_cusum
 
 REPRESENTATIVE = [
     "q1_pricing_summary",

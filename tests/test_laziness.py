@@ -28,26 +28,7 @@ EXCLUDED = {
 }
 
 QUERIES = entrymod.queries()
-# demoted-from-registry queries stay under the same test discipline
-from simple_etl_pipeline_spark.testing import demoted_queries as _dq  # noqa: E402
-QUERIES.update({k: fn for k, (fn, _) in _dq().items()})
-# banked prebuilds must already satisfy the zero-job build contract
-# BEFORE they earn a registry slot — resolved from the machine-readable
-# bank itself (second review pass: a hardcoded copy would silently lapse
-# for the next round's additions; _BANKED_PREBUILDS is the source of
-# truth and its consistency test guarantees each name resolves)
-from simple_etl_pipeline_spark.plans import events as _lev  # noqa: E402
-from simple_etl_pipeline_spark.plans import multimodal as _lmm  # noqa: E402
-from simple_etl_pipeline_spark.plans import relational as _lrel  # noqa: E402
-from simple_etl_pipeline_spark.plans import similarity as _lsim  # noqa: E402
-from simple_etl_pipeline_spark.plans import text as _ltxt  # noqa: E402
 
-for _name in entrymod._BANKED_PREBUILDS:
-    for _mod in (_lev, _lrel, _lsim, _ltxt, _lmm):
-        _fn = getattr(_mod, _name, None)
-        if callable(_fn):
-            QUERIES[_name] = _fn
-            break
 LAZY_QUERIES = sorted(
     n
     for n in QUERIES

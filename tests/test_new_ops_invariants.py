@@ -333,15 +333,10 @@ def test_session_oracle_ties_match_spark(spark, tmp_path):
         ),
         os.path.join(d, "events.parquet"),
     )
-    # ev_session_windows was DEMOTED from the registry in round 12
-    # (streaming twin st_session_windows keeps the identical oracle
-    # registered); the tie-semantics pin continues against the
-    # demoted-queries map, same discipline as every other demotion
-    from simple_etl_pipeline_spark.testing import demoted_queries
+    import __spark_entry__ as entrymod
 
-    fn, sql = demoted_queries()["ev_session_windows"]
-    df = fn(spark, d)
-    compare_with_oracle(df, sql, d)
+    df = entrymod.queries()["ev_session_windows"](spark, d)
+    compare_with_oracle(df, entrymod.oracle_sql()["ev_session_windows"], d)
     out = sorted(
         (r.session_start, r.n_events) for r in df.collect()
     )
@@ -349,7 +344,7 @@ def test_session_oracle_ties_match_spark(spark, tmp_path):
     assert [n for _, n in out] == [1, 2], out
 
 
-# --- CUPED (round-6 prebuild: pytest-oracle until a window slot opens) ----
+# --- CUPED ----------------------------------------------------------------
 def test_cuped_matches_oracle(spark, sf_dir):
     from simple_etl_pipeline_spark.plans.events import EV_CUPED_ORACLE, ev_cuped
     from simple_etl_pipeline_spark.testing import compare_with_oracle

@@ -10,9 +10,6 @@ import pytest
 import __spark_entry__ as entrymod
 
 QUERIES = entrymod.queries()
-# demoted-from-registry queries stay under the same test discipline
-from simple_etl_pipeline_spark.testing import demoted_queries as _dq  # noqa: E402
-QUERIES.update({k: fn for k, (fn, _) in _dq().items()})
 
 
 def _plan(spark, sf_dir, name) -> str:

@@ -184,7 +184,7 @@ def test_scalar_bnlj_text_parser_statistics_and_codegen():
     assert scalar_bnlj_violations(centroid) == []
 
 
-def _spliced_plan(agg_keys_line: str) -> str:
+def _spliced_plan(agg_keys_line: str, marker: str = "Final") -> str:
     """Synthetic cache-spliced plan modeled on the r16 live find: an
     EXECUTED persisted frame re-printed under InMemoryRelation, whose
     AdaptiveSparkPlan '== Final/Initial Plan ==' sections restart the
@@ -208,7 +208,7 @@ def _spliced_plan(agg_keys_line: str) -> str:
         "         +- InMemoryTableScan (11)\n"
         "               +- InMemoryRelation (12)\n"
         "                     +- AdaptiveSparkPlan (36)\n"
-        "                        +- == Final Plan ==\n"
+        f"                        +- == {marker} Plan ==\n"
         "                           ResultQueryStage (35)\n"
         "                           +- * BroadcastNestedLoopJoin Cross"
         " BuildRight (34)\n"
@@ -245,4 +245,17 @@ def test_scalar_bnlj_audit_skips_executed_cache_splices():
     # pre-marker rigor retained: the keyed aggregate is still flagged,
     # and ONLY it — no phantom finding for the spliced node
     v = scalar_bnlj_violations(_spliced_plan("Keys [1]: [user_id#5L]"))
+    assert len(v) == 1 and "(9)" in v[0] and "keyed aggregate" in v[0], v
+
+
+def test_scalar_bnlj_audit_skips_current_plan_splices():
+    """A spliced AdaptiveSparkPlan that is not final yet prints
+    '== Current Plan ==' instead of '== Final Plan =='. Nodes under it
+    have the same reset tree-art columns, so they are out of scope too."""
+    from simple_etl_pipeline_spark.operators.planaudit import (
+        scalar_bnlj_violations,
+    )
+
+    assert scalar_bnlj_violations(_spliced_plan("Keys: []", "Current")) == []
+    v = scalar_bnlj_violations(_spliced_plan("Keys [1]: [user_id#5L]", "Current"))
     assert len(v) == 1 and "(9)" in v[0] and "keyed aggregate" in v[0], v

@@ -1,13 +1,12 @@
 """Component-level operators (BM25 top-K, inverted index, weighted
 reservoir sampling) — verified with the SAME compare_with_oracle
-discipline the driver gate uses. Since round 5 they are ALSO
-registered in queries() with driver-window slots; these tests remain
-as the faster, always-on lock.
+discipline as the registry-wide oracle gate. They are ALSO registered
+in queries(); these tests remain as the faster, always-on lock.
 
-Also home of the pytest-only dedup_minhash_ml comparison (demoted from
-the registry in round 5: pyspark.ml MinHashLSH seeds are internal, so
-it can never be oracle-hashed — its semantics are pinned against the
-oracle-checked dedup_minhash_lsh twin here instead).
+Also home of the pytest-only dedup_minhash_ml comparison (not in the
+registry: pyspark.ml MinHashLSH seeds are internal, so it can never be
+oracle-hashed — its semantics are pinned against the oracle-checked
+dedup_minhash_lsh twin here instead).
 """
 
 from __future__ import annotations

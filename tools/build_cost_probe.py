@@ -25,10 +25,6 @@ def main() -> None:
     spark = get_spark(app_name="build_cost_probe", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
-    from simple_etl_pipeline_spark.testing import demoted_queries
-
-    for _n, (_fn, _sql) in demoted_queries().items():
-        queries.setdefault(_n, _fn)
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
     from simple_etl_pipeline_spark.plans.relational import (
         release_barriers_for,

@@ -87,48 +87,6 @@ def main():
     spark = get_spark(shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()
-    # demoted queries keep their evidence sections (their plans are
-    # still the SCALING.md claims' backing, same reason bench keeps
-    # their timing rows)
-    from simple_etl_pipeline_spark.testing import demoted_queries
-
-    for _n, (_fn, _sql) in demoted_queries().items():
-        qs.setdefault(_n, _fn)
-    # banked prebuilds carry their evidence sections from build time
-    from simple_etl_pipeline_spark.plans.similarity import dq_embedding_drift
-    from simple_etl_pipeline_spark.plans.text import train_attention_pack
-
-    qs.setdefault("train_attention_pack", train_attention_pack)
-    qs.setdefault("dq_embedding_drift", dq_embedding_drift)
-    from simple_etl_pipeline_spark.plans.relational import dq_snapshot_diff
-    from simple_etl_pipeline_spark.plans.text import train_binpack_shelves
-
-    qs.setdefault("train_binpack_shelves", train_binpack_shelves)
-    qs.setdefault("dq_snapshot_diff", dq_snapshot_diff)
-    from simple_etl_pipeline_spark.plans.events import ev_mad_outliers
-    from simple_etl_pipeline_spark.plans.multimodal import (
-        mm_bytes_shard_pack,
-    )
-    from simple_etl_pipeline_spark.plans.similarity import sim_knn_graph
-
-    qs.setdefault("ev_mad_outliers", ev_mad_outliers)
-    qs.setdefault("sim_knn_graph", sim_knn_graph)
-    qs.setdefault("mm_bytes_shard_pack", mm_bytes_shard_pack)
-    from simple_etl_pipeline_spark.plans.events import (
-        ev_changepoint_cusum,
-    )
-    from simple_etl_pipeline_spark.plans.similarity import (
-        sim_knn_components,
-    )
-    from simple_etl_pipeline_spark.plans.text import (
-        train_eval_decontam_report,
-    )
-
-    qs.setdefault("sim_knn_components", sim_knn_components)
-    qs.setdefault(
-        "train_eval_decontam_report", train_eval_decontam_report
-    )
-    qs.setdefault("ev_changepoint_cusum", ev_changepoint_cusum)
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     out = ["# PLANS — captured physical plans (sf0.1, AQE on)", "",

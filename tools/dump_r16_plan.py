@@ -14,9 +14,6 @@ sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
 spark = get_spark(app_name="dump_r16_plan")
 spark.sparkContext.setLogLevel("ERROR")
 qs = entrymod.queries()
-from simple_etl_pipeline_spark.testing import demoted_queries
-for _n, (_fn, _sql) in demoted_queries().items():
-    qs.setdefault(_n, _fn)
 outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16")
 os.makedirs(outdir, exist_ok=True)
 for name in names:

@@ -29,12 +29,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    # demoted queries keep full oracle parity via testing.demoted_queries
-    from simple_etl_pipeline_spark.testing import demoted_queries
-
-    for n, (fn, sql) in demoted_queries().items():
-        queries.setdefault(n, fn)
-        oracles.setdefault(n, sql)
     failures = []
     for sf_dir in sf_dirs:
         spark.catalog.clearCache()

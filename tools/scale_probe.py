@@ -579,96 +579,6 @@ def main() -> None:
     spark = get_spark(app_name="scale_probe")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
-    # unregistered prebuilds keep the same probe discipline
-    from simple_etl_pipeline_spark.plans import events as _evmod
-
-    for _n in (
-        "ev_quantile_sketch",
-        "ev_attribution_linear",
-        "ev_path_transitions",
-        "ev_gap_fill",
-        "ev_hll_overlap",
-        "ev_srm_check",
-        "ev_trimmed_mean",
-    ):
-        queries.setdefault(_n, getattr(_evmod, _n))
-    from simple_etl_pipeline_spark.plans import relational as _relmod
-    from simple_etl_pipeline_spark.plans import text as _txtmod
-
-    queries.setdefault("agg_rfm_segments", _relmod.agg_rfm_segments)
-    queries.setdefault("dq_expectations", _relmod.dq_expectations)
-    queries.setdefault("txt_domain_split", _txtmod.txt_domain_split)
-    queries.setdefault("agg_basket_lift", _relmod.agg_basket_lift)
-    queries.setdefault(
-        "train_curriculum_order", _txtmod.train_curriculum_order
-    )
-    queries.setdefault("search_hybrid_rrf", _txtmod.search_hybrid_rrf)
-    queries.setdefault("txt_lm_perplexity", _txtmod.txt_lm_perplexity)
-    from simple_etl_pipeline_spark.plans import similarity as _simmod
-
-    queries.setdefault(
-        "train_hard_negatives", _simmod.train_hard_negatives
-    )
-    queries.setdefault(
-        "train_token_budget_pack", _txtmod.train_token_budget_pack
-    )
-    queries.setdefault(
-        "ev_time_embargo_split", _evmod.ev_time_embargo_split
-    )
-    queries.setdefault(
-        "ev_seasonal_residuals", _evmod.ev_seasonal_residuals
-    )
-    queries.setdefault("dq_profile_drift", _relmod.dq_profile_drift)
-    queries.setdefault("dq_k_anonymity", _relmod.dq_k_anonymity)
-    queries.setdefault("agg_ols_trend", _relmod.agg_ols_trend)
-    queries.setdefault(
-        "txt_boilerplate_lines", _txtmod.txt_boilerplate_lines
-    )
-    from simple_etl_pipeline_spark.plans import multimodal as _mmmod
-
-    queries.setdefault("mm_phash_dedup", _mmmod.mm_phash_dedup)
-    # round-12-built r13 bank
-    from simple_etl_pipeline_spark.streaming import stateful as _stmod
-
-    queries.setdefault(
-        "train_attention_pack", _txtmod.train_attention_pack
-    )
-    queries.setdefault("dq_embedding_drift", _simmod.dq_embedding_drift)
-    queries.setdefault("st_dedup_lsh_index", _stmod.st_dedup_lsh_index)
-    # r14 bank (built in the round-12 continuation session)
-    from simple_etl_pipeline_spark.streaming import events as _stevmod
-
-    queries.setdefault(
-        "train_binpack_shelves", _txtmod.train_binpack_shelves
-    )
-    queries.setdefault("dq_snapshot_diff", _relmod.dq_snapshot_diff)
-    queries.setdefault(
-        "st_embedding_drift", _stevmod.st_embedding_drift
-    )
-    # r15 bank (same session)
-    queries.setdefault("ev_mad_outliers", _evmod.ev_mad_outliers)
-    queries.setdefault("sim_knn_graph", _simmod.sim_knn_graph)
-    queries.setdefault(
-        "mm_bytes_shard_pack", _mmmod.mm_bytes_shard_pack
-    )
-    # r16 bank (same session)
-    queries.setdefault(
-        "sim_knn_components", _simmod.sim_knn_components
-    )
-    queries.setdefault(
-        "train_eval_decontam_report",
-        _txtmod.train_eval_decontam_report,
-    )
-    queries.setdefault(
-        "ev_changepoint_cusum", _evmod.ev_changepoint_cusum
-    )
-    # ... and so do demoted queries (pytest-only parity twins): probe
-    # lists name them by their original keys, which leave the registry
-    # on demotion.
-    from simple_etl_pipeline_spark import testing as _testing
-
-    for _n, (_fn, _sql) in _testing.demoted_queries().items():
-        queries.setdefault(_n, _fn)
     results: dict[str, dict[int, float]] = {q: {} for q in probe}
     base = tempfile.mkdtemp(prefix="spark_graft_scale_")
     try:
